@@ -322,6 +322,12 @@ def _group_grid(rtbl, blob_source: str):
     return hgt.decode_tile(_read_blob_from_path(str(rtbl.column("path")[0].as_py())))
 
 
+def _read_only_centers(rows) -> np.ndarray:
+    centers = np.array([[r.tile_lat, r.tile_lon] for r in rows], dtype=np.int64).reshape(-1, 2)
+    centers.setflags(write=False)
+    return centers
+
+
 class ElevationEngine:
     """DataFrame-level elevation service — the `SrtmService` analog
     (API parity table: SURVEY.md §2.8; htg-python/src/lib.rs:110-316)."""
@@ -378,6 +384,8 @@ class ElevationEngine:
         # lazily measured ONCE (catalog is immutable): (n_tiles, total_bytes);
         # total_bytes is None while unmeasured (see _measure_catalog)
         self._catalog_stats: tuple[int, int | None] | None = None
+        # likewise collected ONCE: the (n_tiles, 2) centers kNN joins use
+        self._centers: np.ndarray | None = None
         # serializes the lazy one-time catalog work (blob collect+broadcast,
         # stats agg) against preload(blocking=False)'s background thread —
         # without it two threads can each collect the full raw-blob catalog
@@ -656,12 +664,20 @@ class ElevationEngine:
                 if self._bcast is None:
                     rows = self.catalog.select("tile_lat", "tile_lon", "data").collect()
                     blobs = {(r.tile_lat, r.tile_lon): bytes(r.data) for r in rows}
+                    if self._centers is None:
+                        self._centers = _read_only_centers(rows)
                     self._bcast = self.spark.sparkContext.broadcast(blobs)
         return self._bcast
 
     def tile_centers(self) -> np.ndarray:
-        rows = self.catalog.select("tile_lat", "tile_lon").collect()
-        return np.array([[r.tile_lat, r.tile_lon] for r in rows], dtype=np.int64).reshape(-1, 2)
+        """(n_tiles, 2) int64 tile (lat, lon), collected once (or taken from
+        the blob broadcast's collect) and shared by every join."""
+        if self._centers is None:
+            with self._prep_lock:
+                if self._centers is None:
+                    rows = self.catalog.select("tile_lat", "tile_lon").collect()
+                    self._centers = _read_only_centers(rows)
+        return self._centers
 
     # -- the join ------------------------------------------------------------
 

@@ -22,6 +22,8 @@ def get_spark(
       banned by design)
     - shuffle partitions sized to cores locally; on a real cluster set it to
       2-3x total executor cores via spark-submit conf.
+    - local masters run their Python workers from ``htg_spark.pyworker``,
+      which stops each task from re-reading pyspark.zip (see that module).
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     cores = 32
@@ -67,6 +69,17 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
     )
+    if master.split("[")[0] == "local" and _workers_import_htg():
+        builder = builder.config("spark.python.daemon.module", "htg_spark.pyworker")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _workers_import_htg() -> bool:
+    """Whether a local Python worker can import htg_spark. The daemon runs
+    in the JVM's working directory, which is this process's, with this
+    process's PYTHONPATH appended to Spark's own."""
+    root = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    dirs = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return any(d and os.path.realpath(d) == root for d in dirs)

@@ -193,13 +193,39 @@ def test_assign_nearest_center_chunked_large_catalog():
     # reference: one-shot argmin over lexsorted centers (first-min tie rule)
     order = np.lexsort((centers[:, 1], centers[:, 0]))
     sc = centers[order].astype(np.float64)
-    d = (lat[:, None] - (sc[:, 0] + 0.5)) ** 2 + (lon[:, None] - (sc[:, 1] + 0.5)) ** 2
-    want = sc[np.argmin(d, axis=1)].astype(np.int64)
+    # in point chunks: the full 65,536 x ~12k distance matrix is ~6 GB
+    idx = np.concatenate([
+        np.argmin(
+            (lat[i : i + 1024, None] - (sc[:, 0] + 0.5)) ** 2
+            + (lon[i : i + 1024, None] - (sc[:, 1] + 0.5)) ** 2,
+            axis=1,
+        )
+        for i in range(0, len(lat), 1024)
+    ])
+    want = sc[idx].astype(np.int64)
     assert np.array_equal(got, want)
     # point-axis chunking (bounds peak memory independent of batch size)
     # must not change a single assignment
     got2 = assign_nearest_center(lat, lon, centers, chunk=1000, point_chunk=777)
     assert np.array_equal(got2, want)
+
+
+def test_repeated_knn_join_plans_without_jobs(spark, grids, points_pdf):
+    """Tile centers are collected once per engine, by the blob broadcast's
+    own collect: after preload(), building broadcast kNN join plans, the
+    first and a repeated one, launches no Spark job."""
+    eng = ElevationEngine(spark, grids=grids)
+    eng.preload()
+    df = spark.createDataFrame(points_pdf.head(50))
+    sc = spark.sparkContext
+    sc.setJobGroup("knn-plan", "plan broadcast kNN joins")
+    try:
+        eng.elevation_join(df, strategy="broadcast", knn_fallback=True)
+        out = eng.elevation_join(df, mode="bilinear", strategy="broadcast", knn_fallback=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("knn-plan")) == []
+    assert out.where("knn_used").count() > 0
 
 
 def test_cogroup_blob_source_path(spark, grids, points_pdf, tmp_path):
