@@ -493,9 +493,10 @@ def q_knn_fallback(spark, sf_dir):
 
 def q_elevation_cogroup_knn(spark, sf_dir):
     """J6 through the scale path: the same kNN-fallback rows as
-    q_knn_fallback, produced by the two-pass cogroup strategy (first salted
-    cogroup join, then nearest-center assignment + assigned-tile cogroup
-    over the missing remainder). Shares the broadcast-path `knn` oracle."""
+    q_knn_fallback, produced by the two-pass cogroup strategy (a salted
+    cogroup join whose kernel assigns each miss its nearest tile, then an
+    assigned-tile cogroup over the missing remainder). Shares the
+    broadcast-path `knn` oracle."""
     eng = get_engine(spark)
     pts = derive_points(_events(spark, sf_dir))
     out = eng.elevation_join(

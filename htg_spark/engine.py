@@ -33,15 +33,25 @@ kNN nearest-tile fallback (new, north rule): in-coverage points whose tile
 is absent are assigned the catalog tile with the nearest center (squared
 euclidean in degrees, ties by (tile_lat, tile_lon)), coordinates clamped
 into that tile's [0,1] frac range — half-open boundary semantics preserved
-via the explicit frac-based kernels. Supported by BOTH strategies: in-kernel
-on the broadcast path; a two-pass plan on the cogroup path
-(``_knn_second_pass`` — results row-identical by test).
+via the explicit frac-based kernels. Both strategies run it inside
+``kernel_batch``. On the cogroup path a group holds one tile, so pass 1's
+kernel assigns each miss its nearest tile but finds no grid for it; pass 2
+re-keys only those rows by the assigned tile and runs the same kernel
+against the semi-join-pruned catalog (results row-identical by test).
+
+NULL coordinates: every strategy keeps the input lat/lon, returns a NULL
+tile key, in_coverage / tile_found / knn_used false and a NULL (or default)
+elevation; strict=True raises on them.
+
+The two plan methods (``_join_broadcast``, ``_join_cogroup``) are the only
+tile-join plans: they take the batch kernel and its appended fields, so the
+terrain stencil (``operators.terrain``) runs through them too.
 """
 
 from __future__ import annotations
 
 from collections import OrderedDict
-from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -50,20 +60,18 @@ from pyspark.sql import types as T
 
 from . import cells, hgt
 
-# appended output columns (in order)
-_APPENDED = [
-    ("lat", T.DoubleType()),
-    ("lon", T.DoubleType()),
+# kernel-computed output columns every tile join appends after (lat, lon)
+TILE_FIELDS = [
     ("tile_lat", T.IntegerType()),
     ("tile_lon", T.IntegerType()),
     ("in_coverage", T.BooleanType()),
     ("tile_found", T.BooleanType()),
-    ("knn_used", T.BooleanType()),
 ]
 
 
-def _elev_type(mode: str):
-    return T.DoubleType() if mode == "bilinear" else T.IntegerType()
+def _elevation_fields(mode: str):
+    elev = T.DoubleType() if mode == "bilinear" else T.IntegerType()
+    return TILE_FIELDS + [("knn_used", T.BooleanType()), ("elevation", elev)]
 
 
 def _read_blob_from_path(path: str) -> bytes:
@@ -189,6 +197,31 @@ def assign_nearest_center(
     return sc[best_i].astype(np.int64)
 
 
+def cell_code(tile_lat, tile_lon):
+    """Packed 1-degree cell code, collision-free over the whole tile-key
+    range (tile_lon + 180 <= 360 < 361). Works on int64 NumPy arrays and on
+    long Spark Columns alike; ``cell_of`` unpacks one code."""
+    return (tile_lat + 90) * 361 + (tile_lon + 180)
+
+
+def cell_of(code: int) -> tuple[int, int]:
+    return code // 361 - 90, code % 361 - 180
+
+
+def tile_groups(klat: np.ndarray, klon: np.ndarray, idx: np.ndarray):
+    """Yield ((tile_lat, tile_lon), rows) for the points `idx`, grouped by
+    tile key. One int64 argsort on the cell code beats np.unique(axis=0)'s
+    structured-dtype sort by ~50x on 64k batches."""
+    if not len(idx):
+        return
+    code = cell_code(klat[idx].astype(np.int64), klon[idx].astype(np.int64))
+    order = np.argsort(code, kind="stable")
+    sc = code[order]
+    starts = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
+    for s, e in zip(starts, np.r_[starts[1:], len(sc)]):
+        yield cell_of(int(sc[s])), idx[order[s:e]]
+
+
 def kernel_batch(
     lat: np.ndarray,
     lon: np.ndarray,
@@ -212,65 +245,38 @@ def kernel_batch(
     found = np.zeros(n, dtype=bool)
     knn_used = np.zeros(n, dtype=bool)
 
-    idx = np.nonzero(in_cov)[0]
-    if len(idx):
-        # group by a scalar composite key: one int64 argsort beats
-        # np.unique(axis=0)'s structured-dtype sort by ~50x on 64k batches
-        code = (klat[idx].astype(np.int64) + 90) * 400 + (klon[idx].astype(np.int64) + 180)
-        order = np.argsort(code, kind="stable")
-        sc = code[order]
-        bounds = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
-        ends = np.r_[bounds[1:], len(sc)]
-        missing_pts: list[np.ndarray] = []
-        for s, e in zip(bounds, ends):
-            gi = idx[order[s:e]]
-            tl = int(sc[s] // 400 - 90)
-            tn = int(sc[s] % 400 - 180)
-            grid = get_grid((tl, tn))
-            if grid is None:
-                missing_pts.append(gi)
-                continue
-            found[gi] = True
-            if mode == "bilinear":
-                vals, _void = hgt.lookup_bilinear(grid, lat[gi], lon[gi])
-                elev[gi] = vals  # NaN where void
-            else:
-                vals = hgt.lookup_nearest(grid, lat[gi], lon[gi], rounding=mode)
-                elev[gi] = np.where(vals == hgt.VOID_VALUE, np.nan, vals.astype(np.float64))
+    def lookup(key, gi) -> bool:
+        grid = get_grid(key)
+        if grid is None:
+            return False
+        found[gi] = True
+        # position within the tile (hgt.grid_position's exact ops); the
+        # clamp to frac [0, 1] binds only for kNN-assigned points
+        nm1 = grid.shape[0] - 1.0
+        row_pos = (1.0 - np.clip(lat[gi] - key[0], 0.0, 1.0)) * nm1
+        col_pos = np.clip(lon[gi] - key[1], 0.0, 1.0) * nm1
+        if mode == "bilinear":
+            elev[gi], _void = hgt.lookup_bilinear_pos(grid, row_pos, col_pos)  # NaN where void
+        else:
+            vals = hgt.lookup_nearest_pos(grid, row_pos, col_pos, rounding=mode)
+            elev[gi] = np.where(vals == hgt.VOID_VALUE, np.nan, vals.astype(np.float64))
+        return True
 
-        # kNN nearest-tile fallback for in-coverage points with no tile (J6)
-        if missing_pts and knn_centers is not None and len(knn_centers):
-            mi = np.concatenate(missing_pts)
-            tsel = assign_nearest_center(lat[mi], lon[mi], knn_centers)
-            klat[mi] = tsel[:, 0]
-            klon[mi] = tsel[:, 1]
-            knn_used[mi] = True
-            # clamp coordinates into the assigned tile -> frac in [0, 1]
-            fr_lat = np.clip(lat[mi] - tsel[:, 0], 0.0, 1.0)
-            fr_lon = np.clip(lon[mi] - tsel[:, 1], 0.0, 1.0)
-            kcode = (tsel[:, 0] + 90) * 400 + (tsel[:, 1] + 180)
-            korder = np.argsort(kcode, kind="stable")
-            ksc = kcode[korder]
-            kb = np.flatnonzero(np.r_[True, ksc[1:] != ksc[:-1]])
-            ke = np.r_[kb[1:], len(ksc)]
-            for s, e in zip(kb, ke):
-                sub = korder[s:e]
-                tl = int(ksc[s] // 400 - 90)
-                tn = int(ksc[s] % 400 - 180)
-                grid = get_grid((tl, tn))
-                if grid is None:  # cannot happen: centers come from catalog
-                    continue
-                gi = mi[sub]
-                found[gi] = True
-                nm1 = grid.shape[0] - 1.0
-                row_pos = (1.0 - fr_lat[sub]) * nm1
-                col_pos = fr_lon[sub] * nm1
-                if mode == "bilinear":
-                    vals, _void = hgt.lookup_bilinear_pos(grid, row_pos, col_pos)
-                    elev[gi] = vals
-                else:
-                    vals = hgt.lookup_nearest_pos(grid, row_pos, col_pos, rounding=mode)
-                    elev[gi] = np.where(vals == hgt.VOID_VALUE, np.nan, vals.astype(np.float64))
+    missing = []
+    for key, gi in tile_groups(klat, klon, np.nonzero(in_cov)[0]):
+        if not lookup(key, gi):
+            missing.append(gi)
+    # kNN nearest-tile fallback for in-coverage points with no tile (J6)
+    if missing and knn_centers is not None and len(knn_centers):
+        mi = np.concatenate(missing)
+        tsel = assign_nearest_center(lat[mi], lon[mi], knn_centers)
+        klat[mi] = tsel[:, 0]
+        klon[mi] = tsel[:, 1]
+        knn_used[mi] = True
+        # a miss here is a cogroup pass-1 group: the assigned tile lives in
+        # another group, and pass 2 re-keys the row there
+        for key, gi in tile_groups(klat, klon, mi):
+            lookup(key, gi)
 
     return {
         "lat": lat,
@@ -284,33 +290,31 @@ def kernel_batch(
     }
 
 
-def _result_table(rid, res: dict, mode: str):
-    """Assemble the kernel's NumPy outputs straight into a pyarrow.Table
-    for the cogroup hot path. Skipping a per-group pandas DataFrame
-    round-trip (construct + block consolidation + Arrow re-conversion per
-    GROUP, and groups are small under salting) keeps the grouped kernel
-    stage's constant cost at the Arrow floor."""
+def _kernel_arrays(res: dict, fields, arrow_types) -> list:
+    """Arrow columns for the kernel-computed `fields` (the plans forward
+    lat/lon as the input Arrow columns). NaN marks NULL in float results
+    and NumPy masked arrays carry their own mask; the tile key is NULL
+    where a coordinate is (NaN once off Arrow)."""
     import pyarrow as pa
 
-    e = res["elevation"]
-    nan_mask = np.isnan(e)
-    if mode == "bilinear":
-        elev = pa.array(e, type=pa.float64(), from_pandas=True)  # NaN -> null
-    else:
-        elev = pa.array(np.where(nan_mask, 0, e).astype(np.int32), mask=nan_mask)
-    arrays = [
-        rid,
-        pa.array(res["lat"], type=pa.float64()),
-        pa.array(res["lon"], type=pa.float64()),
-        pa.array(np.asarray(res["tile_lat"], dtype=np.int32)),
-        pa.array(np.asarray(res["tile_lon"], dtype=np.int32)),
-        pa.array(np.asarray(res["in_coverage"], dtype=bool)),
-        pa.array(np.asarray(res["tile_found"], dtype=bool)),
-        pa.array(np.asarray(res["knn_used"], dtype=bool)),
-        elev,
+    no_tile = np.isnan(res["lat"]) | np.isnan(res["lon"])
+    no_tile = no_tile if no_tile.any() else None  # a mask costs 15x the copy
+    return [
+        pa.array(res[name], type=t, from_pandas=True,
+                 mask=no_tile if name in ("tile_lat", "tile_lon") else None)
+        for (name, _), t in zip(fields, arrow_types)
     ]
-    names = ["_rid"] + [n for n, _t in _APPENDED] + ["elevation"]
-    return pa.Table.from_arrays(arrays, names=names)
+
+
+def _out_schema(head: list, fields) -> T.StructType:
+    coords = [("lat", T.DoubleType()), ("lon", T.DoubleType())]
+    return T.StructType(head + [T.StructField(n, t) for n, t in coords + fields])
+
+
+def _double_coords(pts: DataFrame) -> DataFrame:
+    # the plans forward lat/lon untouched, so they must already be doubles
+    # (a no-op cast is optimized away)
+    return pts.withColumns({c: F.col(c).cast("double") for c in ("lat", "lon")})
 
 
 def _group_grid(rtbl, blob_source: str):
@@ -726,7 +730,8 @@ class ElevationEngine:
             )
 
         if strict:
-            bad = pts.where(~cells.in_coverage(F.col("lat"), F.col("lon"))).limit(1).count()
+            cov = F.coalesce(cells.in_coverage(F.col("lat"), F.col("lon")), F.lit(False))
+            bad = pts.where(~cov).limit(1).count()
             if bad:
                 raise ValueError("coordinates out of SRTM coverage (strict mode)")
 
@@ -749,10 +754,13 @@ class ElevationEngine:
             if "path" not in self.catalog.columns:
                 raise ValueError("blob_source='path' needs a path-bearing catalog")
 
+        kernel, fields = partial(kernel_batch, mode=mode), _elevation_fields(mode)
         if strategy == "broadcast":
-            out = self._join_broadcast(pts, mode, knn_fallback)
+            out = self._join_broadcast(pts, kernel, fields, knn_fallback)
         elif strategy == "cogroup":
-            out = self._join_cogroup(pts, mode, knn_fallback, id_col, n_salts, blob_source)
+            out = self._join_cogroup(
+                pts, kernel, fields, id_col, n_salts, blob_source, knn_fallback
+            )
         else:
             raise ValueError(f"bad strategy {strategy!r}")
 
@@ -781,26 +789,28 @@ class ElevationEngine:
 
     # -- broadcast (map-only) strategy ----------------------------------------
 
-    def _join_broadcast(self, pts: DataFrame, mode: str, knn: bool) -> DataFrame:
+    def _join_broadcast(
+        self, pts: DataFrame, kernel, fields, knn: bool = False
+    ) -> DataFrame:
         """Map-only Arrow stage: lat/lon come off the Arrow buffers as
-        zero-copy NumPy views, the kernel runs vectorized, payload columns
-        are forwarded as untouched Arrow arrays (the multi-MB image bytes
-        never enter pandas or get copied)."""
+        zero-copy NumPy views, `kernel(lat, lon, get_grid)` runs vectorized
+        and appends `fields`; payload columns and lat/lon are forwarded as
+        untouched Arrow arrays (the multi-MB image bytes never enter pandas
+        or get copied)."""
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
 
+        pts = _double_coords(pts)
         bcast = self._broadcast_blobs()
-        centers = self.tile_centers() if knn else None
+        kw = {"knn_centers": self.tile_centers()} if knn else {}
         cache_cap = self.cache_size
         token = self._cache_token
-        out_schema = T.StructType(
-            [f for f in pts.schema.fields if f.name not in ("lat", "lon")]
-        )
-        for name, typ in _APPENDED:
-            out_schema = out_schema.add(name, typ)
-        out_schema = out_schema.add("elevation", _elev_type(mode))
-        passthrough = [f.name for f in pts.schema.fields if f.name not in ("lat", "lon")]
+        passthrough = [f for f in pts.schema.fields if f.name not in ("lat", "lon")]
+        out_schema = _out_schema(passthrough, fields)
+        names = [f.name for f in out_schema.fields]
+        arrow_types = [to_arrow_type(t) for _, t in fields]
 
-        def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
+        def run(batches):
             cache = _executor_cache(token, cache_cap)
             blobs = bcast.value
 
@@ -808,33 +818,16 @@ class ElevationEngine:
                 return cache.get(key, blobs.get)
 
             for batch in batches:
-                lat = batch.column(batch.schema.get_field_index("lat")).to_numpy(
-                    zero_copy_only=False
+                lat = batch.column("lat")
+                lon = batch.column("lon")
+                res = kernel(
+                    lat.to_numpy(zero_copy_only=False),
+                    lon.to_numpy(zero_copy_only=False),
+                    get_grid,
+                    **kw,
                 )
-                lon = batch.column(batch.schema.get_field_index("lon")).to_numpy(
-                    zero_copy_only=False
-                )
-                res = kernel_batch(lat, lon, get_grid, mode, knn_centers=centers)
-                e = res["elevation"]
-                nan_mask = np.isnan(e)
-                if mode == "bilinear":
-                    elev_arr = pa.array(e, type=pa.float64(), from_pandas=True)  # NaN -> null
-                else:
-                    elev_arr = pa.array(
-                        np.where(nan_mask, 0, e).astype(np.int32), mask=nan_mask
-                    )
-                arrays = [batch.column(batch.schema.get_field_index(c)) for c in passthrough]
-                arrays += [
-                    pa.array(res["lat"], type=pa.float64()),
-                    pa.array(res["lon"], type=pa.float64()),
-                    pa.array(res["tile_lat"], type=pa.int32()),
-                    pa.array(res["tile_lon"], type=pa.int32()),
-                    pa.array(res["in_coverage"]),
-                    pa.array(res["tile_found"]),
-                    pa.array(res["knn_used"]),
-                    elev_arr,
-                ]
-                names = passthrough + [n for n, _t in _APPENDED] + ["elevation"]
+                arrays = [batch.column(f.name) for f in passthrough] + [lat, lon]
+                arrays += _kernel_arrays(res, fields, arrow_types)
                 yield pa.RecordBatch.from_arrays(arrays, names=names)
 
         return pts.mapInArrow(run, schema=out_schema)
@@ -928,11 +921,12 @@ class ElevationEngine:
     def _join_cogroup(
         self,
         pts: DataFrame,
-        mode: str,
-        knn: bool,
+        kernel,
+        fields,
         id_col: str,
         n_salts: int,
         blob_source: str = "inline",
+        knn: bool = False,
     ) -> DataFrame:
         """Salted cogroup join with ADAPTIVE skew salting: a histogram
         pre-pass counts points per tile cell, and each cell gets
@@ -940,51 +934,41 @@ class ElevationEngine:
         salt buckets. Cold tiles cross the shuffle once; only hot-cluster
         tiles fan out — at 10^12 rows this is the difference between
         replicating the whole catalog n_salts times and replicating just the
-        skewed cells (SURVEY.md §4 'Skew handling')."""
+        skewed cells (SURVEY.md §4 'Skew handling').
+
+        kNN fallback (J6 at scale): the fallback tile is data-dependent, so
+        the first shuffle cannot route to it. Pass 1's kernel assigns each
+        in-coverage miss its nearest catalog tile (centers are 2 ints per
+        tile, NOT blobs, so they ship with the closure at any catalog size);
+        its group holds no grid for that tile, so the row leaves pass 1 with
+        the assigned key and tile_found false. Pass 2 re-keys only those
+        rows by the assigned tile and runs the same kernel against the
+        catalog semi-join-pruned to the assigned tiles (its kNN step
+        re-derives the same nearest tile, now present). Misses are typically
+        a small fraction of rows, so the extra shuffle is proportional to
+        the miss rate."""
         if id_col not in pts.columns:
             raise ValueError(f"cogroup strategy needs a unique id column {id_col!r}")
+        pts = _double_coords(pts)
         narrow, cat = self._salted_inputs(pts, id_col, n_salts, blob_source)
-
-        id_field = pts.schema[id_col].dataType
-        out_schema = T.StructType([T.StructField("_rid", id_field)])
-        for name, typ in _APPENDED:
-            out_schema = out_schema.add(name, typ)
-        out_schema = out_schema.add("elevation", _elev_type(mode))
-
-        def apply(key, ltbl, rtbl):
-            # Arrow-native grouped kernel: to_numpy on the Arrow columns is
-            # zero-copy for float64, and the result goes straight back into
-            # Arrow arrays — no per-group pandas DataFrame in either
-            # direction (the per-group constant cost is what dominates this
-            # stage once salting makes groups small).
-            lat = ltbl.column("lat").to_numpy(zero_copy_only=False)
-            lon = ltbl.column("lon").to_numpy(zero_copy_only=False)
-            grid = None if ltbl.num_rows == 0 else _group_grid(rtbl, blob_source)
-            cell = key[0].as_py() // n_salts
-            klat, klon = cell // 361 - 90, cell % 361 - 180
-            res = kernel_batch(
-                lat,
-                lon,
-                (lambda k, _g=grid: _g if (k[0], k[1]) == (klat, klon) else None),
-                mode,
-            )
-            return _result_table(ltbl.column("_rid"), res, mode)
+        out_schema = _out_schema([T.StructField("_rid", pts.schema[id_col].dataType)], fields)
+        centers = self.tile_centers() if knn else None
+        apply = _cogroup_kernel(kernel, fields, n_salts, blob_source, centers)
 
         # The shuffle + Python crossing carries ONE packed int key instead
         # of (tile_lat int, tile_lon int, salt int): mixed-radix
-        # gk = ((tile_lat+90) * 361 + (tile_lon+180)) * n_salts + salt —
-        # collision-free (salt < n_salts, lon+180 < 361), exact in int32
-        # for n_salts up to ~3.3e4, and 8 fewer bytes on every narrow row
-        # through the exchange AND through Arrow into the worker (~380 MB
-        # less at 48M rows). The apply decodes the cell back from the key.
+        # gk = cell_code(tile_lat, tile_lon) * n_salts + salt —
+        # collision-free (salt < n_salts), exact in int32 for n_salts up to
+        # ~3.3e4, and 8 fewer bytes on every narrow row through the
+        # exchange AND through Arrow into the worker (~380 MB less at 48M
+        # rows). The apply decodes the cell back from the key.
+        def gk(salt):
+            code = cell_code(F.col("tile_lat").cast("long"), F.col("tile_lon").cast("long"))
+            return (code * n_salts + salt).cast("int").alias("gk")
+
         blob_col = "data" if blob_source == "inline" else "path"
-        gk = (
-            ((F.col("tile_lat") + 90).cast("long") * 361
-             + (F.col("tile_lon") + 180).cast("long")) * n_salts
-            + F.col("salt")
-        ).cast("int").alias("gk")
-        narrow = narrow.select("_rid", "lat", "lon", gk)
-        cat = cat.select(gk, blob_col)
+        narrow = narrow.select("_rid", "lat", "lon", gk(F.col("salt")))
+        cat = cat.select(gk(F.col("salt")), blob_col)
 
         # explicit-count repartition on the grouping key for BOTH cogroup
         # sides, sized from the histogram pre-pass's row estimate: AQE's
@@ -1009,8 +993,26 @@ class ElevationEngine:
             .cogroup(cat.repartition(n_parts, "gk").groupBy("gk"))
             .applyInArrow(apply, schema=out_schema)
         )
-        if knn:
-            joined = self._knn_second_pass(joined, mode, out_schema, blob_source)
+        if knn and len(centers):
+            # Materialize pass 1 ONCE before splitting it into rest/miss:
+            # the union branches and the key set would otherwise each embed
+            # the full pass-1 subtree and the cogroup kernel stage would
+            # execute once per branch (Spark SQL has no cross-branch
+            # common-subtree reuse). A lazy localCheckpoint swaps the
+            # subtree for one shared RDD — no driver-side job at plan-build
+            # time, and the checkpoint writes only the narrow pass-1 output.
+            joined = joined.localCheckpoint(eager=False)
+            is_miss = F.col("in_coverage") & ~F.col("tile_found")
+            miss = joined.where(is_miss)
+            # prune the catalog to assigned tiles before the blob shuffle
+            keys = F.broadcast(miss.select("tile_lat", "tile_lon").distinct())
+            cat = self.catalog.join(keys, ["tile_lat", "tile_lon"], "left_semi")
+            second = (
+                miss.select("_rid", "lat", "lon", gk(F.lit(0))).groupBy("gk")
+                .cogroup(cat.select(gk(F.lit(0)), blob_col).groupBy("gk"))
+                .applyInArrow(apply, schema=out_schema)
+            )
+            joined = joined.where(~is_miss).unionByName(second)
         extra_cols = [c for c in pts.columns if c not in (id_col, "lat", "lon")]
         if not extra_cols:
             # no payload to re-attach: skip the rejoin shuffle entirely
@@ -1019,109 +1021,33 @@ class ElevationEngine:
             joined.withColumnRenamed("_rid", id_col), on=id_col, how="inner"
         )
 
-    def _knn_second_pass(
-        self, joined: DataFrame, mode: str, out_schema, blob_source: str = "inline"
-    ) -> DataFrame:
-        """kNN fallback for the cogroup strategy (J6 at scale): the fallback
-        tile is data-dependent, so the first shuffle cannot route to it.
-        Second pass: take the in-coverage missing-tile remainder (narrow
-        rows only), assign each point its nearest catalog tile center
-        (chunked NumPy argmin over broadcast centers — centers are 2 ints
-        per tile, NOT blobs, so this broadcasts fine at any catalog size),
-        then cogroup those rows with the semi-join-pruned catalog keyed by
-        the ASSIGNED tile. Misses are typically a small fraction of rows,
-        so the extra shuffle is proportional to the miss rate."""
-        import pyarrow as pa
 
-        centers = self.tile_centers()
-        if len(centers) == 0:
-            return joined
-        # Materialize pass 1 ONCE before splitting it into rest/miss: the
-        # two union branches would otherwise each embed the full pass-1
-        # subtree and the expensive cogroup kernel stage would execute
-        # TWICE (Spark SQL has no cross-branch common-subtree reuse). A
-        # lazy localCheckpoint swaps the subtree for one shared RDD — no
-        # driver-side job at plan-build time, and the checkpoint writes
-        # only the narrow pass-1 output, not the inputs.
-        joined = joined.localCheckpoint(eager=False)
-        is_miss = F.col("in_coverage") & ~F.col("tile_found")
-        rest = joined.where(~is_miss)
-        miss = joined.where(is_miss).select("_rid", "lat", "lon")
+def _cogroup_kernel(kernel, fields, n_salts: int, blob_source: str, knn_centers=None):
+    """The cogroup plan's grouped apply: one (cell, salt) group's points
+    against its catalog side (one tile or none). Arrow-native — to_numpy on
+    the float64 columns is zero-copy and the result goes straight back into
+    Arrow arrays, no per-group pandas DataFrame in either direction (the
+    per-group constant cost dominates this stage once salting makes groups
+    small)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
-        bc = self.spark.sparkContext.broadcast(centers)
-        rid_field = out_schema["_rid"].dataType
-        assign_schema = T.StructType(
-            [
-                T.StructField("_rid", rid_field),
-                T.StructField("lat", T.DoubleType()),
-                T.StructField("lon", T.DoubleType()),
-                T.StructField("tile_lat", T.IntegerType()),
-                T.StructField("tile_lon", T.IntegerType()),
-            ]
+    arrow_types = [to_arrow_type(t) for _, t in fields]
+    names = ["_rid", "lat", "lon"] + [name for name, _ in fields]
+    kw = {} if knn_centers is None else {"knn_centers": knn_centers}
+
+    def apply(key, ltbl, rtbl):
+        gk = key[0].as_py()  # NULL for points with a NULL coordinate
+        cell = None if gk is None else cell_of(gk // n_salts)
+        grid = None if ltbl.num_rows == 0 else _group_grid(rtbl, blob_source)
+        lat, lon = ltbl.column("lat"), ltbl.column("lon")
+        res = kernel(
+            lat.to_numpy(zero_copy_only=False),
+            lon.to_numpy(zero_copy_only=False),
+            lambda k: grid if k == cell else None,
+            **kw,
         )
+        arrays = [ltbl.column("_rid"), lat, lon] + _kernel_arrays(res, fields, arrow_types)
+        return pa.Table.from_arrays(arrays, names=names)
 
-        def assign(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-            cent = bc.value
-            for batch in batches:
-                lat = batch.column(1).to_numpy(zero_copy_only=False)
-                lon = batch.column(2).to_numpy(zero_copy_only=False)
-                t = assign_nearest_center(lat, lon, cent)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        batch.column(0),
-                        pa.array(lat, type=pa.float64()),
-                        pa.array(lon, type=pa.float64()),
-                        pa.array(t[:, 0].astype(np.int32)),
-                        pa.array(t[:, 1].astype(np.int32)),
-                    ],
-                    names=["_rid", "lat", "lon", "tile_lat", "tile_lon"],
-                )
-
-        assigned = miss.mapInArrow(assign, schema=assign_schema)
-        # prune the catalog to assigned tiles before the blob shuffle
-        keys = assigned.select("tile_lat", "tile_lon").distinct()
-        blob_col = "data" if blob_source == "inline" else "path"
-        cat = self.catalog.join(
-            F.broadcast(keys), ["tile_lat", "tile_lon"], "left_semi"
-        ).select("tile_lat", "tile_lon", blob_col)
-
-        def apply_knn(key, ltbl, rtbl):
-            grid = None if ltbl.num_rows == 0 else _group_grid(rtbl, blob_source)
-            lat = ltbl.column("lat").to_numpy(zero_copy_only=False)
-            lon = ltbl.column("lon").to_numpy(zero_copy_only=False)
-            tl, tn = int(key[0].as_py()), int(key[1].as_py())
-            n = ltbl.num_rows
-            elev = np.full(n, np.nan, dtype=np.float64)
-            if grid is not None:
-                # clamp coordinates into the assigned tile -> frac in [0, 1]
-                # (identical math to kernel_batch's broadcast-path fallback)
-                fr_lat = np.clip(lat - tl, 0.0, 1.0)
-                fr_lon = np.clip(lon - tn, 0.0, 1.0)
-                nm1 = grid.shape[0] - 1.0
-                row_pos = (1.0 - fr_lat) * nm1
-                col_pos = fr_lon * nm1
-                if mode == "bilinear":
-                    elev, _void = hgt.lookup_bilinear_pos(grid, row_pos, col_pos)
-                else:
-                    vals = hgt.lookup_nearest_pos(grid, row_pos, col_pos, rounding=mode)
-                    elev = np.where(
-                        vals == hgt.VOID_VALUE, np.nan, vals.astype(np.float64)
-                    )
-            res = {
-                "lat": lat,
-                "lon": lon,
-                "tile_lat": np.full(n, tl, dtype=np.int32),
-                "tile_lon": np.full(n, tn, dtype=np.int32),
-                "in_coverage": np.ones(n, dtype=bool),
-                "tile_found": np.full(n, grid is not None, dtype=bool),
-                "knn_used": np.ones(n, dtype=bool),
-                "elevation": elev,
-            }
-            return _result_table(ltbl.column("_rid"), res, mode)
-
-        second = (
-            assigned.groupBy("tile_lat", "tile_lon")
-            .cogroup(cat.groupBy("tile_lat", "tile_lon"))
-            .applyInArrow(apply_knn, schema=out_schema)
-        )
-        return rest.unionByName(second)
+    return apply

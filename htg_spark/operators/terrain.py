@@ -8,11 +8,13 @@ terrain products computed from the SAME decoded tiles — the 3x3 Horn
 
 Design split (Spark-first):
 
-- The ONLY Python work is the raster gather: a map-only ``mapInArrow``
-  stage (same shape as ``engine._join_broadcast``) groups each Arrow batch
-  by tile, reads the 3x3 neighborhood per point, and emits the two Horn
-  stencil sums as EXACT int64 columns (``gxs``, ``gys``). Integer sums are
-  order-free, so this stage has no float-parity surface at all.
+- The ONLY Python work is the raster gather: ``terrain_batch`` groups the
+  points by tile, reads the 3x3 neighborhood per point, and emits the two
+  Horn stencil sums as EXACT int64 columns (``gxs``, ``gys``). Integer sums
+  are order-free, so this stage has no float-parity surface at all. It is
+  a batch kernel for the engine's tile-join plans, the map-only
+  ``_join_broadcast`` and the salted ``_join_cogroup``, which run it
+  exactly as they run the elevation kernel.
 - Every derived product — gradient, slope magnitude, hillshade, aspect
   octant — is a JVM-side whole-stage-codegen expression over those two
   longs (``terrain_cols``), built from correctly-rounded IEEE ops only
@@ -50,11 +52,11 @@ Per-POINT stencils treat tiles as independent, matching the reference
 (tile.rs:299-318); the boundary-correct whole-raster path is the halo
 exchange at the bottom of this module (``mosaic_horn_stats``).
 
-Scale shape: identical to the broadcast elevation join — tile blobs ride
-a broadcast, the stage is map-only (ZERO shuffle Exchanges, gated in
+Scale shape: the elevation join's own plans. Broadcast: tile blobs ride a
+broadcast, the stage is map-only (ZERO shuffle Exchanges, gated in
 PLANS.md), and per-batch work is one argsort group-by plus nine vectorized
-gathers. At 10^12 points this is the same plan that already scales; there
-is nothing new to shuffle.
+gathers. Cogroup: the engine's adaptive salted shuffle, with
+blob_source='path' keeping raster bytes out of the exchange.
 """
 
 from __future__ import annotations
@@ -68,6 +70,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import hgt
+from ..engine import TILE_FIELDS, tile_groups
 
 # default sun: azimuth 315 (NW), altitude 45. Exact-double literals shared
 # verbatim with the SQL oracle (cos45*sin315 == -0.5 and cos45*cos315 ==
@@ -76,13 +79,8 @@ SUN_LX = -0.5
 SUN_LY = 0.5
 SUN_LZ = 0.7071067811865476
 
-_TERRAIN_APPENDED = [
-    ("lat", T.DoubleType()),
-    ("lon", T.DoubleType()),
-    ("tile_lat", T.IntegerType()),
-    ("tile_lon", T.IntegerType()),
-    ("in_coverage", T.BooleanType()),
-    ("tile_found", T.BooleanType()),
+# kernel-computed columns terrain_join appends after (lat, lon)
+_TERRAIN_FIELDS = TILE_FIELDS + [
     ("terrain_ok", T.BooleanType()),
     ("gxs", T.LongType()),
     ("gys", T.LongType()),
@@ -127,10 +125,11 @@ def horn_sums(grid: np.ndarray, row: np.ndarray, col: np.ndarray):
 
 
 def terrain_batch(lat: np.ndarray, lon: np.ndarray, get_grid):
-    """Batch kernel: tile-group the points (same composite-code argsort as
-    ``engine.kernel_batch``), locate each point's nearest sample
-    (round-half-away, tile.rs:158-186), and evaluate the Horn stencil.
-    Returns a dict of column arrays matching ``_TERRAIN_APPENDED``."""
+    """Batch kernel: tile-group the points (``engine.tile_groups``), locate
+    each point's nearest sample (round-half-away, tile.rs:158-186), and
+    evaluate the Horn stencil. Returns a dict of column arrays matching
+    ``_TERRAIN_FIELDS``; gxs/gys are masked arrays, masked (NULL) wherever
+    terrain_ok is false."""
     lat = np.asarray(lat, dtype=np.float64)
     lon = np.asarray(lon, dtype=np.float64)
     n = len(lat)
@@ -141,30 +140,15 @@ def terrain_batch(lat: np.ndarray, lon: np.ndarray, get_grid):
     gxs = np.zeros(n, dtype=np.int64)
     gys = np.zeros(n, dtype=np.int64)
 
-    idx = np.nonzero(in_cov)[0]
-    if len(idx):
-        code = (klat[idx].astype(np.int64) + 90) * 400 + (
-            klon[idx].astype(np.int64) + 180
-        )
-        order = np.argsort(code, kind="stable")
-        sc = code[order]
-        bounds = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
-        ends = np.r_[bounds[1:], len(sc)]
-        for s, e in zip(bounds, ends):
-            gi = idx[order[s:e]]
-            tl = int(sc[s] // 400 - 90)
-            tn = int(sc[s] % 400 - 180)
-            grid = get_grid((tl, tn))
-            if grid is None:
-                continue
-            found[gi] = True
-            row_pos, col_pos = hgt.grid_position(lat[gi], lon[gi], grid.shape[0])
-            r = hgt.round_half_away_nonneg(row_pos).astype(np.int64)
-            c = hgt.round_half_away_nonneg(col_pos).astype(np.int64)
-            gx_g, gy_g, ok_g = horn_sums(grid, r, c)
-            gxs[gi] = gx_g
-            gys[gi] = gy_g
-            ok[gi] = ok_g
+    for key, gi in tile_groups(klat, klon, np.nonzero(in_cov)[0]):
+        grid = get_grid(key)
+        if grid is None:
+            continue
+        found[gi] = True
+        row_pos, col_pos = hgt.grid_position(lat[gi], lon[gi], grid.shape[0])
+        r = hgt.round_half_away_nonneg(row_pos).astype(np.int64)
+        c = hgt.round_half_away_nonneg(col_pos).astype(np.int64)
+        gxs[gi], gys[gi], ok[gi] = horn_sums(grid, r, c)
 
     return {
         "lat": lat,
@@ -174,8 +158,8 @@ def terrain_batch(lat: np.ndarray, lon: np.ndarray, get_grid):
         "in_coverage": in_cov,
         "tile_found": found,
         "terrain_ok": ok,
-        "gxs": gxs,
-        "gys": gys,
+        "gxs": np.ma.masked_array(gxs, mask=~ok),
+        "gys": np.ma.masked_array(gys, mask=~ok),
     }
 
 
@@ -187,15 +171,16 @@ def terrain_join(
     n_salts: int = 8,
     blob_source: str | None = None,
 ) -> DataFrame:
-    """Append (tile_lat, tile_lon, in_coverage, tile_found, terrain_ok,
-    gxs, gys) to `points`. gxs/gys are NULL wherever terrain_ok is false.
+    """Append (lat, lon, tile_lat, tile_lon, in_coverage, tile_found,
+    terrain_ok, gxs, gys) to `points`. gxs/gys are NULL wherever terrain_ok
+    is false.
 
+    Runs ``terrain_batch`` through the engine's tile-join plans:
     strategy='broadcast' is the map-only plan (tile blobs ride a Spark
-    broadcast — the terrain twin of ``ElevationEngine._join_broadcast``);
-    strategy='cogroup' is the 100-TB scale path: the engine's adaptive
-    salted-cogroup shuffle (histogram pre-pass, hot cells fan out, cold
-    cells cross once; blob_source='path' ships only tile URIs so raster
-    bytes never enter a shuffle). Both return identical rows
+    broadcast); strategy='cogroup' is the 100-TB scale path, the engine's
+    adaptive salted-cogroup shuffle (histogram pre-pass, hot cells fan out,
+    cold cells cross once; blob_source='path' ships only tile URIs so
+    raster bytes never enter a shuffle). Both return identical rows
     (test_terrain_cogroup_equals_broadcast).
 
     Derived float products are deliberately NOT computed here: apply
@@ -207,131 +192,12 @@ def terrain_join(
     if strategy == "cogroup":
         if blob_source is None:
             blob_source = "path" if "path" in engine.catalog.columns else "inline"
-        return _terrain_cogroup(engine, pts, id_col, n_salts, blob_source)
+        return engine._join_cogroup(
+            pts, terrain_batch, _TERRAIN_FIELDS, id_col, n_salts, blob_source
+        )
     if strategy != "broadcast":
         raise ValueError(f"bad strategy {strategy!r}")
-    return _terrain_broadcast(engine, pts)
-
-
-def _terrain_broadcast(engine, pts: DataFrame) -> DataFrame:
-    import pyarrow as pa
-
-    from ..engine import _executor_cache
-
-    bcast = engine._broadcast_blobs()
-    cache_cap = engine.cache_size
-    token = engine._cache_token
-
-    out_schema = T.StructType(
-        [f for f in pts.schema.fields if f.name not in ("lat", "lon")]
-    )
-    for name, typ in _TERRAIN_APPENDED:
-        out_schema = out_schema.add(name, typ)
-    passthrough = [f.name for f in pts.schema.fields if f.name not in ("lat", "lon")]
-
-    def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        cache = _executor_cache(token, cache_cap)
-        blobs = bcast.value
-
-        def get_grid(key):
-            return cache.get(key, blobs.get)
-
-        for batch in batches:
-            lat = batch.column(batch.schema.get_field_index("lat")).to_numpy(
-                zero_copy_only=False
-            )
-            lon = batch.column(batch.schema.get_field_index("lon")).to_numpy(
-                zero_copy_only=False
-            )
-            res = terrain_batch(lat, lon, get_grid)
-            bad = ~res["terrain_ok"]
-            arrays = [
-                batch.column(batch.schema.get_field_index(c)) for c in passthrough
-            ]
-            arrays += [
-                pa.array(res["lat"], type=pa.float64()),
-                pa.array(res["lon"], type=pa.float64()),
-                pa.array(res["tile_lat"], type=pa.int32()),
-                pa.array(res["tile_lon"], type=pa.int32()),
-                pa.array(res["in_coverage"]),
-                pa.array(res["tile_found"]),
-                pa.array(res["terrain_ok"]),
-                pa.array(res["gxs"], mask=bad),
-                pa.array(res["gys"], mask=bad),
-            ]
-            names = passthrough + [n for n, _t in _TERRAIN_APPENDED]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return pts.mapInArrow(run, schema=out_schema)
-
-
-def _terrain_result_table(rid, res: dict):
-    """Arrow-native grouped-kernel output (no per-group pandas round-trip —
-    same rationale as engine._result_table)."""
-    import pyarrow as pa
-
-    bad = ~res["terrain_ok"]
-    arrays = [
-        rid,
-        pa.array(res["lat"], type=pa.float64()),
-        pa.array(res["lon"], type=pa.float64()),
-        pa.array(np.asarray(res["tile_lat"], dtype=np.int32)),
-        pa.array(np.asarray(res["tile_lon"], dtype=np.int32)),
-        pa.array(np.asarray(res["in_coverage"], dtype=bool)),
-        pa.array(np.asarray(res["tile_found"], dtype=bool)),
-        pa.array(np.asarray(res["terrain_ok"], dtype=bool)),
-        pa.array(res["gxs"], mask=bad),
-        pa.array(res["gys"], mask=bad),
-    ]
-    names = ["_rid"] + [n for n, _t in _TERRAIN_APPENDED]
-    return pa.Table.from_arrays(arrays, names=names)
-
-
-def _terrain_cogroup(
-    engine, pts: DataFrame, id_col: str, n_salts: int, blob_source: str
-) -> DataFrame:
-    """Scale-path terrain join through the engine's adaptive salted-cogroup
-    shuffle (engine._salted_inputs: 2% histogram pre-pass, per-cell k_salt,
-    narrow point columns only; blob_source='path' keeps raster bytes out of
-    the exchange entirely)."""
-    from ..engine import _group_grid
-
-    if id_col not in pts.columns:
-        raise ValueError(f"cogroup strategy needs a unique id column {id_col!r}")
-    narrow, cat = engine._salted_inputs(pts, id_col, n_salts, blob_source)
-
-    id_field = pts.schema[id_col].dataType
-    out_schema = T.StructType([T.StructField("_rid", id_field)])
-    for name, typ in _TERRAIN_APPENDED:
-        out_schema = out_schema.add(name, typ)
-
-    def apply(key, ltbl, rtbl):
-        lat = ltbl.column("lat").to_numpy(zero_copy_only=False)
-        lon = ltbl.column("lon").to_numpy(zero_copy_only=False)
-        grid = None if ltbl.num_rows == 0 else _group_grid(rtbl, blob_source)
-        klat, klon = key[0].as_py(), key[1].as_py()
-        res = terrain_batch(
-            lat,
-            lon,
-            (lambda k, _g=grid: _g if (k[0], k[1]) == (klat, klon) else None),
-        )
-        return _terrain_result_table(ltbl.column("_rid"), res)
-
-    # no explicit repartition here (unlike engine._join_cogroup): at this
-    # operator's bench volume (1e5 rows) AQE's coalesced layout measured
-    # equal-or-better than pinned partitions (interleaved A/B 1.46s vs
-    # 1.55s), and at large volumes byte-based coalescing stops binding
-    joined = (
-        narrow.groupBy("tile_lat", "tile_lon", "salt")
-        .cogroup(cat.groupBy("tile_lat", "tile_lon", "salt"))
-        .applyInArrow(apply, schema=out_schema)
-    )
-    extra_cols = [c for c in pts.columns if c not in (id_col, "lat", "lon")]
-    if not extra_cols:
-        return joined.withColumnRenamed("_rid", id_col)
-    return pts.drop("lat", "lon").join(
-        joined.withColumnRenamed("_rid", id_col), on=id_col, how="inner"
-    )
+    return engine._join_broadcast(pts, terrain_batch, _TERRAIN_FIELDS)
 
 
 def aspect_octant_col(gxs: Column, gys: Column) -> Column:

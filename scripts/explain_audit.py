@@ -103,18 +103,23 @@ def main():
     sections.append(
         (
             "Cogroup join with kNN fallback (two-pass)",
-            "Expected: pass 1 is a SHARED checkpointed RDD (Scan ExistingRDD "
+            "Expected: pass 1 (whose kernel also assigns each miss its "
+            "nearest tile) is a SHARED checkpointed RDD (Scan ExistingRDD "
             "— materialized once before the rest/miss split), so exactly ONE "
             "FlatMapCoGroupsInArrow appears: pass 2, keyed by the ASSIGNED "
             "tile over the missing remainder, catalog side semi-join-pruned "
-            "before any blob moves. Still no cartesian product.",
+            "before any blob moves. No MapInArrow: there is no separate "
+            "assignment stage for the miss side and the key set to each "
+            "re-evaluate. Still no cartesian product.",
             knn_plan,
         )
     )
     # hard gate: the pass-1 cogroup must NOT be duplicated into both union
     # branches — one cogroup node total (pass 2), pass 1 hidden behind the
-    # checkpoint's Scan ExistingRDD. Count "(N) Node" detail headers: the
-    # formatted dump prints every node twice (tree line + details block).
+    # checkpoint's Scan ExistingRDD — and no Arrow map stage may sit in the
+    # plan, where two branches would each evaluate it. Count "(N) Node"
+    # detail headers: the formatted dump prints every node twice (tree line
+    # + details block).
     import re as _re2
 
     n_cg = len(_re2.findall(r"\(\d+\) FlatMapCoGroupsIn(?:Pandas|Arrow)", knn_plan))
@@ -122,6 +127,14 @@ def main():
         print(
             f"FATAL: kNN plan has {n_cg} cogroup nodes (expected 1 + a "
             "checkpointed pass-1 Scan ExistingRDD) — pass 1 executes twice",
+            file=sys.stderr,
+        )
+        sys.exit(1)
+    n_map = len(_re2.findall(r"\(\d+\) MapInArrow\b", knn_plan))
+    if n_map:
+        print(
+            f"FATAL: kNN plan has {n_map} MapInArrow nodes (expected 0) — "
+            "the nearest-tile assignment belongs inside the cogroup kernel",
             file=sys.stderr,
         )
         sys.exit(1)

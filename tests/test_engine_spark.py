@@ -8,6 +8,7 @@ import pytest
 
 from htg_spark import cells, fixtures, hgt
 from htg_spark.engine import ElevationEngine
+from htg_spark.operators import terrain
 
 
 @pytest.fixture(scope="module")
@@ -381,6 +382,61 @@ def test_knn_second_pass_runs_pass1_once(spark, engine, points_pdf):
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FlatMapCoGroupsInArrow") == 1
+    # the nearest-tile assignment runs inside the cogroup kernel: no
+    # separate Arrow map stage for a second plan branch to re-evaluate
+    assert plan.count("MapInArrow") == 0
+
+
+@pytest.fixture(scope="module")
+def path_engine(spark, grids, tmp_path_factory):
+    tiles = tmp_path_factory.mktemp("tiles")
+    for (tl, tn), grid in grids.items():
+        (tiles / hgt.coords_to_filename(tl, tn)).write_bytes(hgt.encode_tile(grid))
+    return ElevationEngine(spark, tile_dir=str(tiles))
+
+
+_NULL_COORD_JOINS = {
+    "broadcast": lambda eng, peng, df: eng.elevation_join(df, strategy="broadcast"),
+    "cogroup": lambda eng, peng, df: eng.elevation_join(df, strategy="cogroup", n_salts=4),
+    "cogroup_knn": lambda eng, peng, df: eng.elevation_join(
+        df, strategy="cogroup", knn_fallback=True, n_salts=4
+    ),
+    "cogroup_path": lambda eng, peng, df: peng.elevation_join(
+        df, strategy="cogroup", n_salts=4, blob_source="path"
+    ),
+    "terrain_broadcast": lambda eng, peng, df: terrain.terrain_join(
+        eng, df, id_col="image_id"
+    ),
+    "terrain_cogroup": lambda eng, peng, df: terrain.terrain_join(
+        eng, df, strategy="cogroup", id_col="image_id", n_salts=4
+    ),
+}
+
+
+@pytest.mark.parametrize("join", [*_NULL_COORD_JOINS, "strict"])
+def test_null_coordinates_same_under_every_strategy(spark, engine, path_engine, join):
+    """A NULL lat or lon gets the same answer from every plan: input
+    coordinates kept, NULL tile key, no coverage / tile / kNN, NULL result
+    columns — and strict mode raises, as get_elevation does for NaN."""
+    df = spark.createDataFrame(
+        [("a", None, 138.5, "x"), ("b", 35.5, None, "y"), ("c", 35.5, 138.5, "z")],
+        "image_id string, lat double, lon double, tag string",
+    )
+    if join == "strict":
+        with pytest.raises(ValueError, match="out of SRTM coverage"):
+            engine.elevation_join(df, strict=True)
+        return
+    rows = _NULL_COORD_JOINS[join](engine, path_engine, df).orderBy("image_id").collect()
+    assert [(r.image_id, r.tag, r.lat, r.lon) for r in rows] == [
+        ("a", "x", None, 138.5), ("b", "y", 35.5, None), ("c", "z", 35.5, 138.5)
+    ]
+    results = {"terrain_ok": False, "gxs": None, "gys": None} if join.startswith(
+        "terrain") else {"knn_used": False, "elevation": None}
+    for r in rows[:2]:
+        assert (r.tile_lat, r.tile_lon, r.in_coverage, r.tile_found) == (
+            None, None, False, False)
+        assert {c: r[c] for c in results} == results
+    assert (rows[2].tile_lat, rows[2].tile_lon, rows[2].tile_found) == (35, 138, True)
 
 
 def test_cogroup_adaptive_salting_spreads_hot_tile(spark, engine, grids):
